@@ -41,13 +41,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Bounded-batch finish (round 12, guide §2.4): same contract and ulp
-# story as the SVD kernels (operators/svd.py module note) — below
-# batch_finish the whole alternation trajectory runs in one Arrow
-# kernel replaying the identical closed-form double algebra; the
-# per-alternation join/groupBy plan is unchanged above the bound and
-# remains the only 100 TB path. ALS has no degenerate regime to defer:
-# reg > 0 keeps every solve nonsingular by construction.
+from pyspark_graph_spark.util import integral_keys, run_batch
+
+# Bounded-batch finish (util.run_batch): below batch_finish the whole
+# alternation trajectory runs in one Arrow kernel replaying the
+# identical closed-form double algebra, with the SVD kernels' last-ulp
+# caveat (operators/svd.py module note). ALS has no degenerate regime to
+# defer: reg > 0 keeps every solve nonsingular by construction.
 
 _ALS_SCHEMA = (
     "side tinyint, key long, f1 double, f2 double, b double"
@@ -87,23 +87,6 @@ def _als_emit(users, uf, items, vf):
             "f2": list(uf[1]) + list(vf[1]),
             "b": list(uf[2]) + list(vf[2]),
         }
-    )
-
-
-def _als_batch_out(r: DataFrame, kernel) -> DataFrame:
-    return (
-        r.withColumn("__g", F.lit(0))
-        .groupBy("__g")
-        .applyInPandas(kernel, _ALS_SCHEMA)
-        .localCheckpoint()
-    )
-
-
-def _als_integral_keys(r: DataFrame) -> bool:
-    kinds = {f.name: f.dataType.typeName() for f in r.schema.fields}
-    return all(
-        kinds[k] in ("long", "integer", "short", "byte")
-        for k in ("__u", "__i")
     )
 
 
@@ -264,10 +247,10 @@ def als_bias_rank2(
     ).localCheckpoint()
     if (
         batch_finish
-        and _als_integral_keys(r)
+        and integral_keys(r, "__u", "__i")
         and 0 < r.count() <= batch_finish
     ):
-        out = _als_batch_out(r, _bias_batch_kernel(iterations, reg))
+        out, _ = run_batch(_bias_batch_kernel(iterations, reg), _ALS_SCHEMA, r)
         return (
             out.filter(F.col("side") == 0).select(
                 F.col("key").alias(user_col),
@@ -467,11 +450,11 @@ def als_implicit_rank2(
     ).localCheckpoint()
     if (
         batch_finish
-        and _als_integral_keys(r)
+        and integral_keys(r, "__u", "__i")
         and 0 < r.count() <= batch_finish
     ):
-        out = _als_batch_out(
-            r, _implicit_batch_kernel(iterations, reg, alpha)
+        out, _ = run_batch(
+            _implicit_batch_kernel(iterations, reg, alpha), _ALS_SCHEMA, r
         )
         return (
             out.filter(F.col("side") == 0).select(

@@ -30,23 +30,28 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import (
+    batch_plan,
+    checkpoint_observed,
+    count_rows,
+    integral_keys,
+)
 
 BETWEENNESS = "betweenness"
 
 
 def _batch_brandes(sources: list[int], max_depth: int):
-    """Landmark-sampled Brandes in one Arrow batch (round 12, guide
-    §2.4) — the same forward sigma sums (exact: integer path counts in
-    doubles), the same per-level backward dependency accumulation
-    (sigma_v/sigma_w)*(1+delta_w), the same depth budget. The BFS runs
-    over ALL edge endpoints (the distributed sweeps never intersect
-    with the vertex table mid-flight); the output projects the vertex
-    table with 0 fill, exactly like the final left join. Same ulp story
-    as the SVD kernels: per-sum accumulation order is the only
-    divergence channel, the class of noise Spark's own shuffles carry."""
+    """Landmark-sampled Brandes in one Arrow batch — the same forward sigma
+    sums (exact: integer path counts in doubles), the same per-level
+    backward dependency accumulation (sigma_v/sigma_w)*(1+delta_w), the
+    same depth budget. The BFS runs over ALL edge endpoints (the
+    distributed sweeps never intersect with the vertex table
+    mid-flight); the output projects the vertex table with 0 fill,
+    exactly like the final left join. Same ulp story as the SVD kernels:
+    per-sum accumulation order is the only divergence channel, the class
+    of noise Spark's own shuffles carry."""
 
-    def kern(_key, v_pdf, e_pdf):
+    def kern(v_pdf, e_pdf):
         import numpy as np
         import pandas as pd
 
@@ -142,35 +147,22 @@ class BetweennessCentrality:
             if isinstance(self.sources, DataFrame)
             else [int(x) for x in self.sources]
         )
-        vk = {f.name: f.dataType.typeName() for f in g.vertices.schema.fields}
-        ek = {f.name: f.dataType.typeName() for f in edges.schema.fields}
-        ints = ("long", "integer", "short", "byte")
         if (
             self.batch_finish
             and src_list is not None
             and len(set(src_list)) == len(src_list)
-            and vk.get(ID) in ints
-            and ek.get(SRC) in ints
-            and ek.get(DST) in ints
+            and integral_keys(g.vertices, ID)
+            and integral_keys(edges, SRC, DST)
         ):
-            vv, mv = checkpoint_observed(
-                g.vertices.select(ID), __n=F.count(F.lit(1))
-            )
-            if (
-                0
-                < (me["__n"] or 0) + (mv["__n"] or 0)
-                <= self.batch_finish
-            ):
-                return (
-                    vv.withColumn("__g", F.lit(0))
-                    .groupBy("__g")
-                    .cogroup(
-                        edges.withColumn("__g", F.lit(0)).groupBy("__g")
-                    )
-                    .applyInPandas(
-                        _batch_brandes(src_list, self.max_depth),
-                        f"{ID} long, {BETWEENNESS} double",
-                    )
+            # a count probe, not a checkpoint: above the bound the
+            # sweeps never read the vertex table until the final join
+            vv = g.vertices.select(ID)
+            if 0 < (me["__n"] or 0) + count_rows(vv) <= self.batch_finish:
+                return batch_plan(
+                    _batch_brandes(src_list, self.max_depth),
+                    f"{ID} long, {BETWEENNESS} double",
+                    vv,
+                    edges,
                 )
         sources = self._source_df(g).localCheckpoint()
 

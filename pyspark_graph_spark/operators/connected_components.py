@@ -29,40 +29,40 @@ from pyspark.sql import functions as F
 from pyspark_graph_spark.constants import DST, ID, MSG, SRC, STATE
 from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.operators.pregel import Pregel
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import (
+    batch_plan,
+    checkpoint_observed,
+    integral_keys,
+    run_batch,
+    sorted_positions,
+)
 
 COMPONENT = "component"
 
 
 def _batch_min_label(budget0: int, hard_max: int, auto_extend: bool):
-    """Min-label propagation replayed in one Arrow batch (round 12,
-    guide §2.4): per round every vertex takes the min of its own label
-    and its neighbors' (full messaging is value-identical to the
-    Pregel's frontier messaging — a sender's label was already delivered
-    in the round after it last changed), with the same round budget,
-    the same auto_extend doubling, and the same stop-on-no-change
-    probe. Labels are exact integers, so batch == Pregel bit for bit,
-    INCLUDING truncated labellings when the budget runs out. Edges with
-    an endpoint outside the vertex table relay nothing, exactly like
-    the Pregel state join. Emits per-vertex rows plus constant
-    __rounds/__converged columns the caller reads via the checkpoint's
-    observed metrics."""
+    """Min-label propagation replayed in one Arrow batch: per round every
+    vertex takes the min of its own label and its neighbors' (full
+    messaging is value-identical to the Pregel's frontier messaging — a
+    sender's label was already delivered in the round after it last
+    changed), with the same round budget, the same auto_extend doubling,
+    and the same stop-on-no-change probe. Labels are exact integers, so
+    batch == Pregel bit for bit, INCLUDING truncated labellings when the
+    budget runs out. Edges with an endpoint outside the vertex table
+    relay nothing, exactly like the Pregel state join. Emits per-vertex
+    rows plus constant __rounds/__converged columns the caller reads via
+    the checkpoint's observed metrics."""
 
-    def kern(_key, v_pdf, e_pdf):
+    def kern(v_pdf, e_pdf):
         import numpy as np
         import pandas as pd
 
         ids = np.sort(v_pdf[ID].to_numpy(dtype=np.int64))
         src = e_pdf[SRC].to_numpy(dtype=np.int64)
         dst = e_pdf[DST].to_numpy(dtype=np.int64)
-        s_idx = np.searchsorted(ids, src)
-        d_idx = np.searchsorted(ids, dst)
-        ok = (
-            (s_idx < len(ids))
-            & (ids[np.minimum(s_idx, len(ids) - 1)] == src)
-            & (d_idx < len(ids))
-            & (ids[np.minimum(d_idx, len(ids) - 1)] == dst)
-        )
+        s_idx, s_ok = sorted_positions(ids, src)
+        d_idx, d_ok = sorted_positions(ids, dst)
+        ok = s_ok & d_ok
         s_idx, d_idx = s_idx[ok], d_idx[ok]
         label = ids.copy()
         rounds = 0
@@ -133,14 +133,10 @@ class ConnectedComponents:
         self.batch_finish = batch_finish
 
     def run(self, g: Graph) -> DataFrame:
-        vk = {f.name: f.dataType.typeName() for f in g.vertices.schema.fields}
-        ek = {f.name: f.dataType.typeName() for f in g.edges.schema.fields}
-        ints = ("long", "integer", "short", "byte")
         if (
             self.batch_finish
-            and vk.get(ID) in ints
-            and ek.get(SRC) in ints
-            and ek.get(DST) in ints
+            and integral_keys(g.vertices, ID)
+            and integral_keys(g.edges, SRC, DST)
         ):
             # plain count probes, NOT materializing checkpoints: above
             # the bound the distributed Pregel repartitions and
@@ -161,19 +157,14 @@ class ConnectedComponents:
                         else self.max_iterations
                     )
                 )
-                out, m = checkpoint_observed(
-                    verts.withColumn("__g", F.lit(0))
-                    .groupBy("__g")
-                    .cogroup(
-                        edges.withColumn("__g", F.lit(0)).groupBy("__g")
-                    )
-                    .applyInPandas(
-                        _batch_min_label(
-                            self.max_iterations, hard, self.auto_extend
-                        ),
-                        f"{ID} long, {COMPONENT} long, "
-                        "__rounds long, __converged int",
+                out, m = run_batch(
+                    _batch_min_label(
+                        self.max_iterations, hard, self.auto_extend
                     ),
+                    f"{ID} long, {COMPONENT} long, "
+                    "__rounds long, __converged int",
+                    verts,
+                    edges,
                     __r=F.max("__rounds"),
                     __c=F.min("__converged"),
                 )
@@ -303,16 +294,11 @@ def _batch_union_find(pdf):
 class AlternatingConnectedComponents:
     """Large-star/small-star alternating connected components (Kiveris et al.).
 
-    ``batch_finish``: once the deduped edge list fits this bound, label
-    components with a union-find in ONE bounded Arrow batch instead of
-    the O(log n) alternating-star fixpoint — the same adjudicated
-    bounded-batch-finish contract as matching/MIS/partition/MST, with
-    provably identical output (both paths label every component by its
-    minimum id; equality is pinned by test). 1M edges x 16 B ≈ 16 MB on
-    one executor. 0 disables; the distributed fixpoint remains the
-    asymptotic path for billion-edge graphs (and is what runs above the
-    bound at 100 TB — the bound only short-circuits dimension-scale
-    inputs and contraction tails)."""
+    ``batch_finish`` (util.batch_plan): once the deduped edge list fits
+    this bound, label components with a union-find in one Arrow batch
+    instead of the O(log n) alternating-star fixpoint; both paths label
+    every component by its minimum id. 1M edges x 16 B ≈ 16 MB on one
+    executor. 0 disables."""
 
     def __init__(
         self,
@@ -357,13 +343,11 @@ class AlternatingConnectedComponents:
         )
         n_edges = m0["__n"] or 0
         if self.batch_finish and n_edges <= self.batch_finish:
-            membership = (
-                edges.withColumn("__g", F.lit(0))
-                .groupBy("__g")
-                .applyInPandas(
-                    _batch_union_find, f"{ID} long, {COMPONENT} long"
-                )
-            )
+            # roots come from the vertex table below, as in the star
+            # forest (whose edges only point non-roots at their root)
+            membership = batch_plan(
+                _batch_union_find, f"{ID} long, {COMPONENT} long", edges
+            ).filter(F.col(ID) != F.col(COMPONENT))
             roots_and_isolated = (
                 g.vertices.select(ID)
                 .join(membership.select(ID), on=ID, how="anti")

@@ -24,20 +24,27 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import (
+    BatchDefer,
+    batch_plan,
+    checkpoint_observed,
+    count_rows,
+    integral_keys,
+    run_batch,
+    sorted_positions,
+)
 
 LAYER = "layer"
 
 
 def _batch_kahn(max_iterations: int):
-    """Level-synchronous Kahn peel in one Arrow batch (round 12, guide
-    §2.4): pure set/integer arithmetic, so batch == distributed by
-    construction — including the round budget (cycle vertices and
-    everything the budget strands keep layer NULL) and edges whose
-    source is outside the vertex table (they block their destination
-    forever in both paths)."""
+    """Level-synchronous Kahn peel in one Arrow batch: pure set/integer
+    arithmetic, so batch == distributed by construction — including the
+    round budget (cycle vertices and everything the budget strands keep
+    layer NULL) and edges whose source is outside the vertex table (they
+    block their destination forever in both paths)."""
 
-    def kern(_key, v_pdf, e_pdf):
+    def kern(v_pdf, e_pdf):
         import pandas as pd
 
         verts = [int(x) for x in v_pdf[ID]]
@@ -74,30 +81,21 @@ class TopologicalLayers:
         self.batch_finish = batch_finish
 
     def run(self, g: Graph) -> DataFrame:
-        vk = {f.name: f.dataType.typeName() for f in g.vertices.schema.fields}
-        ek = {f.name: f.dataType.typeName() for f in g.edges.schema.fields}
-        ints = ("long", "integer", "short", "byte")
         if (
             self.batch_finish
-            and vk.get(ID) in ints
-            and ek.get(SRC) in ints
-            and ek.get(DST) in ints
+            and integral_keys(g.vertices, ID)
+            and integral_keys(g.edges, SRC, DST)
         ):
             # plain count probes (no extra materialization above the
             # bound — the distributed body checkpoints its own frames)
             verts = g.vertices.select(ID)
             edges0 = g.edges.select(SRC, DST)
             if 0 < verts.count() + edges0.count() <= self.batch_finish:
-                return (
-                    verts.withColumn("__g", F.lit(0))
-                    .groupBy("__g")
-                    .cogroup(
-                        edges0.withColumn("__g", F.lit(0)).groupBy("__g")
-                    )
-                    .applyInPandas(
-                        _batch_kahn(self.max_iterations),
-                        f"{ID} long, {LAYER} int",
-                    )
+                return batch_plan(
+                    _batch_kahn(self.max_iterations),
+                    f"{ID} long, {LAYER} int",
+                    verts,
+                    edges0,
                 )
         edges = (
             g.edges.select(SRC, DST)
@@ -153,6 +151,10 @@ class TopologicalLayers:
 
 
 DIST = "critical_path"
+_CP_NO_FIXPOINT = (
+    "CriticalPath did not converge within max_iterations — cyclic input "
+    "or depth budget too small"
+)
 
 
 def _batch_critical_path(max_iterations: int):
@@ -163,7 +165,7 @@ def _batch_critical_path(max_iterations: int):
     the loud non-convergence ValueError replay exactly. NaN weights
     defer (Spark compares NaN==NaN as true; IEEE does not)."""
 
-    def kern(_key, v_pdf, e_pdf):
+    def kern(v_pdf, e_pdf):
         import numpy as np
         import pandas as pd
 
@@ -172,15 +174,10 @@ def _batch_critical_path(max_iterations: int):
         dst = e_pdf["dst"].to_numpy(dtype=np.int64)
         w = e_pdf["__w"].to_numpy(dtype=np.float64)
         if np.any(np.isnan(w)):
-            raise RuntimeError("__CP_BATCH_DEGENERATE__")
-        s_idx = np.searchsorted(ids, src)
-        d_idx = np.searchsorted(ids, dst)
-        ok = (
-            (s_idx < len(ids))
-            & (ids[np.minimum(s_idx, len(ids) - 1)] == src)
-            & (d_idx < len(ids))
-            & (ids[np.minimum(d_idx, len(ids) - 1)] == dst)
-        )
+            raise BatchDefer("NaN weight")
+        s_idx, s_ok = sorted_positions(ids, src)
+        d_idx, d_ok = sorted_positions(ids, dst)
+        ok = s_ok & d_ok
         s_idx, d_idx, w = s_idx[ok], d_idx[ok], w[ok]
         dist = np.zeros(len(ids), dtype=np.float64)
         for _ in range(max_iterations):
@@ -189,7 +186,7 @@ def _batch_critical_path(max_iterations: int):
             if np.array_equal(new, dist):
                 return pd.DataFrame({ID: ids, DIST: new})
             dist = new
-        raise ValueError("__CP_BATCH_VALUEERROR__")
+        raise ValueError(_CP_NO_FIXPOINT)
 
     return kern
 
@@ -230,50 +227,24 @@ class CriticalPath:
             .filter(F.col(SRC) != F.col(DST)),
             __n=F.count(F.lit(1)),
         )
-        vk = {f.name: f.dataType.typeName() for f in g.vertices.schema.fields}
-        ek = {f.name: f.dataType.typeName() for f in g.edges.schema.fields}
-        ints = ("long", "integer", "short", "byte")
         if (
             self.batch_finish
-            and vk.get(ID) in ints
-            and ek.get(SRC) in ints
-            and ek.get(DST) in ints
+            and integral_keys(g.vertices, ID)
+            and integral_keys(g.edges, SRC, DST)
         ):
-            verts, mv = checkpoint_observed(
-                g.vertices.select(ID), __n=F.count(F.lit(1))
-            )
-            if (
-                0
-                < (mv["__n"] or 0) + (me["__n"] or 0)
-                <= self.batch_finish
-            ):
-                out = (
-                    verts.withColumn("__g", F.lit(0))
-                    .groupBy("__g")
-                    .cogroup(
-                        edges.withColumn("__g", F.lit(0)).groupBy("__g")
-                    )
-                    .applyInPandas(
-                        _batch_critical_path(self.max_iterations),
-                        f"{ID} long, {DIST} double",
-                    )
+            # a count probe, not a checkpoint: above the bound the
+            # distributed body builds its own vertex state
+            verts = g.vertices.select(ID)
+            n = count_rows(verts) + (me["__n"] or 0)
+            if 0 < n <= self.batch_finish:
+                out, _ = run_batch(
+                    _batch_critical_path(self.max_iterations),
+                    f"{ID} long, {DIST} double",
+                    verts,
+                    edges,
                 )
-                try:
-                    # eager: the non-convergence ValueError must surface
-                    # at the call, and NaN weights defer to the
-                    # distributed plan (Spark's NaN==NaN comparison
-                    # semantics differ from IEEE)
-                    return out.localCheckpoint()
-                except Exception as e:
-                    msg = str(e)
-                    if "__CP_BATCH_VALUEERROR__" in msg:
-                        raise ValueError(
-                            "CriticalPath did not converge within "
-                            "max_iterations — cyclic input or depth "
-                            "budget too small"
-                        ) from None
-                    if "__CP_BATCH_DEGENERATE__" not in msg:
-                        raise
+                if out is not None:
+                    return out
         dist = g.vertices.select(
             ID, F.lit(0.0).alias(DIST)
         ).localCheckpoint()
@@ -315,7 +286,4 @@ class CriticalPath:
             dist = new.drop("__chg")
             if not m["__changed"]:
                 return dist
-        raise ValueError(
-            "CriticalPath did not converge within max_iterations — "
-            "cyclic input or depth budget too small"
-        )
+        raise ValueError(_CP_NO_FIXPOINT)

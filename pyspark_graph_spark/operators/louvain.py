@@ -41,7 +41,13 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import (
+    BatchDefer,
+    checkpoint_observed,
+    integral_keys,
+    run_batch,
+    sorted_positions,
+)
 
 COMMUNITY = "community"
 
@@ -129,15 +135,15 @@ def modularity(
 
 
 def _batch_louvain_moving(fixed_rounds, max_rounds):
-    """Single-level synchronous local moving in one Arrow batch
-    (round 12, guide §2.4): the move scores are EXACT INTEGER
-    arithmetic (module docstring), the tie-break is the same
-    (score, stay-put, smallest community) struct order, and the
-    id-parity move gate replays per round — so batch == distributed
-    bit for bit, including early convergence when probing. Emits the
-    final (id, community) labeling (community = min member id)."""
+    """Single-level synchronous local moving in one Arrow batch: the move
+    scores are EXACT INTEGER arithmetic (module docstring), the
+    tie-break is the same (score, stay-put, smallest community) struct
+    order, and the id-parity move gate replays per round — so batch ==
+    distributed bit for bit, including early convergence when probing.
+    Emits the final (id, community) labeling (community = min member
+    id)."""
 
-    def kern(_key, v_pdf, e_pdf):
+    def kern(v_pdf, e_pdf):
         import numpy as np
         import pandas as pd
 
@@ -148,8 +154,11 @@ def _batch_louvain_moving(fixed_rounds, max_rounds):
         eorder = np.lexsort((b, a))
         a, b, w = a[eorder], b[eorder], w[eorder]
         n = len(ids)
-        a_idx = np.searchsorted(ids, a)
-        b_idx = np.searchsorted(ids, b)
+        a_idx, a_ok = sorted_positions(ids, a)
+        b_idx, b_ok = sorted_positions(ids, b)
+        if not (a_ok.all() and b_ok.all()):
+            # the kernel indexes every endpoint into the vertex table
+            raise BatchDefer("edge endpoint outside the vertex table")
         # weighted degrees: self-loops count twice
         deg = np.zeros(n, dtype=np.int64)
         selfloop = a == b
@@ -200,7 +209,7 @@ def _batch_louvain_moving(fixed_rounds, max_rounds):
                 or int(deg.max(initial=0)) * max(int(tot.max(initial=0)), 1)
                 > 2**61
             ):
-                raise RuntimeError("__LOUVAIN_BATCH_DEGENERATE__")
+                raise BatchDefer("int64 score magnitude")
             score = m2 * allk - du * (ctot - np.where(stay, du, 0))
             # argmax per u by (score, stay, smaller community label);
             # community order is by LABEL (= ids[slot], monotone in slot)
@@ -396,15 +405,11 @@ class Louvain:
 
     def run(self, g: Graph) -> DataFrame:
         und = canonical_undirected(g.edges, self.weight_col)
-        vk = {f.name: f.dataType.typeName() for f in g.vertices.schema.fields}
-        ek = {f.name: f.dataType.typeName() for f in g.edges.schema.fields}
-        ints = ("long", "integer", "short", "byte")
         if (
             self.levels == 1
             and self.batch_finish
-            and vk.get(ID) in ints
-            and ek.get(SRC) in ints
-            and ek.get(DST) in ints
+            and integral_keys(g.vertices, ID)
+            and integral_keys(g.edges, SRC, DST)
         ):
             # gate probe on the RAW edge count (>= the canonical row
             # count, so the bound stays conservative): counting `und`
@@ -414,25 +419,14 @@ class Louvain:
             # persisted shared graph, so its count is a cache scan
             verts = g.vertices.select(F.col(ID).alias("v"))
             if 0 < g.edges.count() + verts.count() <= self.batch_finish:
-                out = (
-                    verts.withColumn("__g", F.lit(0))
-                    .groupBy("__g")
-                    .cogroup(
-                        und.withColumn("__g", F.lit(0)).groupBy("__g")
-                    )
-                    .applyInPandas(
-                        _batch_louvain_moving(
-                            self.fixed_rounds, self.max_rounds
-                        ),
-                        f"{ID} long, {COMMUNITY} long",
-                    )
+                out, _ = run_batch(
+                    _batch_louvain_moving(self.fixed_rounds, self.max_rounds),
+                    f"{ID} long, {COMMUNITY} long",
+                    verts,
+                    und,
                 )
-                try:
-                    # eager so the int64-magnitude deferral surfaces here
-                    return out.localCheckpoint()
-                except Exception as e:
-                    if "__LOUVAIN_BATCH_DEGENERATE__" not in str(e):
-                        raise
+                if out is not None:
+                    return out
         # mapping: original vertex id -> current-level community
         mapping = self._local_moving(
             und, g.vertices.select(F.col(ID).alias("v"))

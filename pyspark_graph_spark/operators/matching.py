@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import batch_plan, checkpoint_observed
 from pyspark_graph_spark.session import (
     default_parallelism as _default_parallelism,
 )
@@ -155,11 +155,10 @@ class MaximalMatching:
             if n_edges == 0:
                 return _merged()
             if self.batch_finish and n_edges <= self.batch_finish:
-                tail = (
-                    edges.select(SRC, DST, "__p", "__np")
-                    .withColumn("__g", F.lit(0))
-                    .groupBy("__g")
-                    .applyInPandas(_batch_greedy, f"{SRC} long, {DST} long")
+                tail = batch_plan(
+                    _batch_greedy,
+                    f"{SRC} long, {DST} long",
+                    edges.select(SRC, DST, "__p", "__np"),
                 )
                 rounds.append(tail)
                 return _merged()

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import checkpoint_observed, run_batch
 
 
 class MaximalIndependentSet:
@@ -204,9 +204,6 @@ class MaximalIndependentSet:
         n_rounds = self._LOCAL_ROUNDS
         seed = self.seed
 
-        vb = undecided.select(ID).withColumn("__g", F.lit(0))
-        eb = edges.select(SRC, DST).withColumn("__g", F.lit(0))
-
         def local_luby(vp, ep):
             import numpy as np
             import pandas as pd
@@ -260,15 +257,13 @@ class MaximalIndependentSet:
                 }
             )
 
-        def wrapped(key, vp, ep):
-            return local_luby(vp, ep)
-
-        return (
-            vb.groupBy("__g")
-            .cogroup(eb.groupBy("__g"))
-            .applyInPandas(wrapped, f"{ID} long, chosen boolean")
-            .localCheckpoint()
+        out, _ = run_batch(
+            local_luby,
+            f"{ID} long, chosen boolean",
+            undecided.select(ID),
+            edges.select(SRC, DST),
         )
+        return out
 
 
 def _batch_color(
@@ -298,9 +293,6 @@ def _batch_color(
     # batches of local_rounds rounds each
     n_batches = -(-mis_budget // local_rounds)  # ceil
     rounds_per_color = n_batches * local_rounds
-
-    vb = remaining_v.select(ID).withColumn("__g", F.lit(0))
-    eb = remaining_e.select(SRC, DST).withColumn("__g", F.lit(0))
 
     def local_color(vp, ep):
         import numpy as np
@@ -359,15 +351,13 @@ def _batch_color(
             s, d = s[keep], d[keep]
         return pd.DataFrame({ID: ids, "color": color})
 
-    def wrapped(key, vp, ep):
-        return local_color(vp, ep)
-
-    return (
-        vb.groupBy("__g")
-        .cogroup(eb.groupBy("__g"))
-        .applyInPandas(wrapped, f"{ID} long, color int")
-        .localCheckpoint()
+    out, _ = run_batch(
+        local_color,
+        f"{ID} long, color int",
+        remaining_v.select(ID),
+        remaining_e.select(SRC, DST),
     )
+    return out
 
 
 def greedy_coloring(

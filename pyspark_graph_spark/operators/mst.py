@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import batch_plan, checkpoint_observed
 from pyspark_graph_spark.operators.connected_components import (
     COMPONENT,
     AlternatingConnectedComponents,
@@ -60,8 +60,7 @@ def _batch_kruskal(pdf):
     """Exact MSF of one bounded edge batch by Kruskal over the
     (weight, src, dst) total order. Distinct total order => the MSF is
     UNIQUE, so this equals the Borůvka fixpoint edge-for-edge (pinned by
-    test) — the same provably-identical bounded-batch-finish contract as
-    the union-find contraction."""
+    test)."""
     import pandas as pd
 
     pdf = pdf.sort_values([WEIGHT, SRC, DST])
@@ -107,13 +106,10 @@ class BoruvkaMST:
         self.max_iterations = max_iterations
         # the contraction graph has <= #components rows (halving per
         # round); once it fits this bound, label it with a union-find in
-        # ONE bounded Arrow batch instead of a full AlternatingCC
-        # fixpoint (each inner CC run is itself O(log n) rounds of fixed-
-        # overhead jobs — the dominant cost of Boruvka at gate scale,
-        # same adjudicated bounded-batch-finish contract as matching/MIS/
-        # multilevel partition). 1M rows x 16 B ≈ 16 MB on one executor.
-        # 0 disables (pure distributed contraction — the asymptotic path
-        # for the first rounds of a billion-vertex forest).
+        # one Arrow batch (util.batch_plan) instead of a full
+        # AlternatingCC fixpoint, whose O(log n) rounds of fixed-overhead
+        # jobs dominate Boruvka at gate scale. 1M rows x 16 B ≈ 16 MB on
+        # one executor. 0 disables.
         self.batch_cc = batch_cc
 
     def run(self, g: Graph) -> DataFrame:
@@ -137,13 +133,10 @@ class BoruvkaMST:
             # instead of log(V) rounds of ~8 fixed-overhead jobs each —
             # weight dtype is preserved from the input schema
             wtype = dict(edges.dtypes)[WEIGHT]
-            return (
-                edges.withColumn("__g", F.lit(0))
-                .groupBy("__g")
-                .applyInPandas(
-                    _batch_kruskal,
-                    f"{SRC} long, {DST} long, {WEIGHT} {wtype}",
-                )
+            return batch_plan(
+                _batch_kruskal,
+                f"{SRC} long, {DST} long, {WEIGHT} {wtype}",
+                edges,
             )
 
         # component label per edge-incident vertex (isolated vertices can
@@ -218,13 +211,8 @@ class BoruvkaMST:
                 pairs = cverts.select(
                     F.col(ID).alias(SRC), F.col(ID).alias(DST)
                 ).unionByName(cedges)
-                mapping = (
-                    pairs.withColumn("__g", F.lit(0))
-                    .groupBy("__g")
-                    .applyInPandas(
-                        _batch_union_find,
-                        f"{ID} long, {COMPONENT} long",
-                    )
+                mapping = batch_plan(
+                    _batch_union_find, f"{ID} long, {COMPONENT} long", pairs
                 )
             else:
                 cgraph = Graph(

@@ -28,23 +28,26 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import (
+    BatchDefer,
+    checkpoint_observed,
+    integral_keys,
+    run_batch,
+    sorted_positions,
+)
 
 PAGERANK = "pagerank"
 
-# Bounded-batch finish (round 12, guide §2.4): same contract and ulp
-# story as the SVD/ALS kernels (operators/svd.py module note) — below
-# batch_finish (vertices + edges in one bound) the whole power-iteration
-# trajectory runs in one cogrouped Arrow kernel replaying the identical
-# double algebra: per edge (pr(src) * w) / deg(src), per vertex
-# (1-α)·reset + α·(sum of contributions, 0 when none), the same
-# iteration count and the same optional L1-delta early stop. The
-# per-iteration join/aggregate plan is unchanged above the bound and
-# remains the only 100 TB path.
+# Bounded-batch finish (util.run_batch; the bound covers vertices +
+# edges): the kernel replays the identical double algebra — per edge
+# (pr(src) * w) / deg(src), per vertex (1-α)·reset + α·(sum of
+# contributions, 0 when none), the same iteration count and the same
+# optional L1-delta early stop — with the SVD kernels' last-ulp caveat
+# (operators/svd.py module note).
 
 
 def _pagerank_batch_kernel(alpha: float, max_iterations: int, tolerance):
-    def kern(_key, v_pdf, e_pdf):
+    def kern(v_pdf, e_pdf):
         import numpy as np
         import pandas as pd
 
@@ -66,10 +69,8 @@ def _pagerank_batch_kernel(alpha: float, max_iterations: int, tolerance):
         # with no rank row contributes nothing (the ranks join), a
         # destination outside the vertex table is dropped (the verts
         # left join)
-        s_idx = np.searchsorted(ids, src)
-        s_ok = (s_idx < len(ids)) & (ids[np.minimum(s_idx, len(ids) - 1)] == src)
-        d_idx = np.searchsorted(ids, dst)
-        d_ok = (d_idx < len(ids)) & (ids[np.minimum(d_idx, len(ids) - 1)] == dst)
+        s_idx, s_ok = sorted_positions(ids, src)
+        d_idx, d_ok = sorted_positions(ids, dst)
         keep = s_ok & d_ok
         s_idx, d_idx = s_idx[keep], d_idx[keep]
         wk = w[keep]
@@ -78,7 +79,7 @@ def _pagerank_batch_kernel(alpha: float, max_iterations: int, tolerance):
             # the distributed plan's division is unguarded — under ANSI
             # a zero out-weight sum raises DIVIDE_BY_ZERO there; defer
             # so that loud error is the behavior in both paths
-            raise RuntimeError("__PR_BATCH_DEGENERATE__")
+            raise BatchDefer("zero out-weight sum")
         pr = reset.copy()
         for _ in range(max_iterations):
             contrib = np.zeros(len(ids), dtype=np.float64)
@@ -105,7 +106,7 @@ def _ppr_multi_batch_kernel(alpha: float, max_iterations: int):
     entries ARE the sparse row set. Nonpositive weights would break
     that equivalence; the kernel defers them to the distributed plan."""
 
-    def kern(_key, r_pdf, e_pdf):
+    def kern(r_pdf, e_pdf):
         import numpy as np
         import pandas as pd
 
@@ -113,7 +114,7 @@ def _ppr_multi_batch_kernel(alpha: float, max_iterations: int):
         dst = e_pdf[DST].to_numpy(dtype=np.int64)
         w = e_pdf["__w"].to_numpy(dtype=np.float64)
         if np.any(~(w > 0.0)):
-            raise RuntimeError("__PR_BATCH_DEGENERATE__")
+            raise BatchDefer("nonpositive weight")
         eorder = np.lexsort((dst, src))
         src, dst, w = src[eorder], dst[eorder], w[eorder]
         dsrc, dinv = np.unique(src, return_inverse=True)
@@ -208,40 +209,26 @@ class PageRank:
             g.vertices.select(ID).withColumn("__reset", reset),
             __n=F.count(F.lit(1)),
         )
-        kinds = dict(
-            [(f.name, f.dataType.typeName()) for f in edges.schema.fields]
-            + [(f.name, f.dataType.typeName()) for f in verts.schema.fields]
-        )
-        integral = all(
-            kinds[c] in ("long", "integer", "short", "byte")
-            for c in (SRC, DST, ID)
-        )
         if (
             self.batch_finish
-            and integral
+            and integral_keys(edges, SRC, DST)
+            and integral_keys(verts, ID)
             and 0
             < (me["__n"] or 0) + (mv["__n"] or 0)
             <= self.batch_finish
         ):
-            out = (
-                verts.withColumn("__g", F.lit(0))
-                .groupBy("__g")
-                .cogroup(edges.withColumn("__g", F.lit(0)).groupBy("__g"))
-                .applyInPandas(
-                    _pagerank_batch_kernel(
-                        self.alpha, self.max_iterations, self.tolerance
-                    ),
-                    f"{ID} long, {PAGERANK} double",
-                )
+            # a zero out-degree defers: the distributed plan's unguarded
+            # ANSI division is the loud behavior
+            out, _ = run_batch(
+                _pagerank_batch_kernel(
+                    self.alpha, self.max_iterations, self.tolerance
+                ),
+                f"{ID} long, {PAGERANK} double",
+                verts,
+                edges,
             )
-            try:
-                # eager so the zero-out-degree deferral surfaces here and
-                # the distributed plan (whose unguarded ANSI division is
-                # the loud behavior) takes over
-                return out.localCheckpoint()
-            except Exception as e:
-                if "__PR_BATCH_DEGENERATE__" not in str(e):
-                    raise
+            if out is not None:
+                return out
         deg = (
             edges.groupBy(SRC)
             .agg(F.sum("__w").alias("__deg"))
@@ -334,31 +321,19 @@ def parallel_personalized_pagerank(
         [(int(s), int(s)) for s in dict.fromkeys(sources)],
         f"{ID} long, source long",
     ).localCheckpoint()
-    ekinds = {f.name: f.dataType.typeName() for f in edges.schema.fields}
     if (
         batch_finish
-        and all(
-            ekinds[c] in ("long", "integer", "short", "byte")
-            for c in (SRC, DST)
-        )
+        and integral_keys(edges, SRC, DST)
         and 0 < (me["__n"] or 0) + len(sources) <= batch_finish
     ):
-        out = (
-            restart.withColumn("__g", F.lit(0))
-            .groupBy("__g")
-            .cogroup(edges.withColumn("__g", F.lit(0)).groupBy("__g"))
-            .applyInPandas(
-                _ppr_multi_batch_kernel(alpha, max_iterations),
-                f"{ID} long, source long, {PAGERANK} double",
-            )
+        out, _ = run_batch(
+            _ppr_multi_batch_kernel(alpha, max_iterations),
+            f"{ID} long, source long, {PAGERANK} double",
+            restart,
+            edges,
         )
-        try:
-            # eager so the nonpositive-weight deferral surfaces here
-            return out.localCheckpoint()
-        except Exception as e:
-            if "__PR_BATCH_DEGENERATE__" not in str(e):
-                raise
-            # fall through to the distributed plan
+        if out is not None:
+            return out
     deg = edges.groupBy(SRC).agg(F.sum("__w").alias("__deg")).localCheckpoint()
     ranks = restart.withColumn(PAGERANK, F.lit(1.0)).localCheckpoint()
     for _ in range(max_iterations):

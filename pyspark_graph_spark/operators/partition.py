@@ -10,7 +10,8 @@ the labels back down through the composed contraction mappings.
 Scale shape: every level is the matching peel (shuffles keyed on vertex)
 plus two hash joins; the only non-distributed step is the final
 assignment, which by construction runs on <= ``max_coarse`` rows inside a
-single ``applyInPandas`` group — a bounded batch, not a driver collect.
+single pandas group (``util.batch_plan``) — a bounded batch, not a
+driver collect.
 The greedy least-loaded rule carries Graham's list-scheduling bound:
 max part load <= (total/k) + max item, which ``run`` exposes as an
 exactly checkable invariant (the gate oracle pins its violation count to
@@ -33,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.operators.matching import MaximalMatching, coarsen
+from pyspark_graph_spark.util import batch_plan, run_batch, sorted_positions
 
 
 def two_hop_pairs(g: Graph, matching: DataFrame) -> DataFrame:
@@ -267,8 +269,6 @@ class MultilevelPartition:
                     "__m", F.lit(1)
                 )
             )
-        vb = vsz.withColumn("__g", F.lit(0))
-        eb = e.withColumn("__g", F.lit(0))
 
         k = self.k
         max_coarse = self.max_coarse
@@ -449,14 +449,8 @@ class MultilevelPartition:
                 {"v": entry, "final": sup_of_entry, "part": parts}
             )
 
-        def wrapped(key, vp, ep):
-            return local_finish(vp, ep)
-
-        out = (
-            vb.groupBy("__g")
-            .cogroup(eb.groupBy("__g"))
-            .applyInPandas(wrapped, "v long, final long, part int")
-            .localCheckpoint()
+        out, _ = run_batch(
+            local_finish, "v long, final long, part int", vsz, e
         )
         if not out.filter(F.col("part") < 0).isEmpty():
             n_coarse = out.select("final").distinct().count()
@@ -495,11 +489,7 @@ class MultilevelPartition:
             pdf["part"] = parts
             return pdf[["super", "part"]]
 
-        assigned = (
-            sizes.withColumn("__g", F.lit(0))
-            .groupBy("__g")
-            .applyInPandas(assign, "super long, part int")
-        )
+        assigned = batch_plan(assign, "super long, part int", sizes)
         return comp.join(F.broadcast(assigned), on="super").select(
             ID, "part", "super"
         )
@@ -568,13 +558,8 @@ def _refine_batched(
         part_s = part[order]
         n = len(vids_s)
 
-        def to_idx(x):
-            i = np.searchsorted(vids_s, x)
-            ok = (i < n) & (vids_s[np.minimum(i, max(n - 1, 0))] == x)
-            return i, ok
-
-        si, sok = to_idx(es_raw)
-        di, dok = to_idx(ed_raw)
+        si, sok = sorted_positions(vids_s, es_raw)
+        di, dok = sorted_positions(vids_s, ed_raw)
         keep = sok & dok  # edges with a foreign endpoint never reach a
         # join with `cur` in the distributed shape — drop identically
         es, ed = si[keep], di[keep]
@@ -635,13 +620,9 @@ def _refine_batched(
             part_s[movers] = to[movers]
         return pd.DataFrame({ID: vids_s, "part": part_s})
 
-    return (
-        vrows.unionByName(erows)
-        .withColumn("__g", F.lit(0))
-        .groupBy("__g")
-        .applyInPandas(kernel, f"{ID} long, part long")
-        .select(ID, F.col("part").cast(part_type).alias("part"))
-    )
+    return batch_plan(
+        kernel, f"{ID} long, part long", vrows.unionByName(erows)
+    ).select(ID, F.col("part").cast(part_type).alias("part"))
 
 
 def refine(
@@ -679,13 +660,10 @@ def refine(
     it scans materialized rows instead of re-executing the caller's
     (possibly expensive, unpersisted) partitioning lineage twice.
 
-    ``batch_finish`` (round 12, guide §2.4): when both the assignment
-    and the edge list fit the bound (two count probes on checkpointed /
-    caller frames), ALL rounds run inside one cogrouped Arrow batch
+    ``batch_finish`` (util.batch_plan): when both the assignment and the
+    edge list fit the bound, ALL rounds run inside one Arrow batch
     (``_refine_batched``) that replays the distributed arithmetic bit
-    for bit — at gate scale the distributed shape cost ~2 checkpoints +
-    1 probe + a windowed rank per round in fixed-overhead jobs. The
-    distributed loop remains the only path above the bound (0 disables).
+    for bit. 0 disables.
     """
     # cap may be a 1-row DataFrame (single numeric column) so callers can
     # derive the balance bound distributively, with no driver collect

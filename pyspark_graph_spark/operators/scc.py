@@ -32,7 +32,12 @@ from pyspark.sql import functions as F
 from pyspark_graph_spark.constants import DST, ID, MSG, SRC, STATE
 from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.operators.pregel import Pregel
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import (
+    batch_plan,
+    checkpoint_observed,
+    run_batch,
+    sorted_positions,
+)
 
 COMPONENT = "component"
 
@@ -43,9 +48,7 @@ def _batch_tarjan(pdf):
     the label the FW-BW coloring converges to (the root r of an emitted
     SCC satisfies color(r) = r, and any larger member would out-color
     it, so r is the SCC maximum; equality pinned by test). Iterative
-    Tarjan (explicit stack, no recursion limit) inside one bounded Arrow
-    batch — the same adjudicated bounded-batch-finish contract as the
-    CC/MST/matching batches."""
+    Tarjan (explicit stack, no recursion limit)."""
     import pandas as pd
 
     adj: dict[int, list[int]] = {}
@@ -108,6 +111,20 @@ def _batch_tarjan(pdf):
     return pd.DataFrame(
         sorted(comp.items()), columns=[ID, COMPONENT]
     )
+
+
+def _batch_tarjan_induced(pdf):
+    """_batch_tarjan over the subgraph induced by the vertex rows (marked
+    ``__v``): the distributed trim drops every edge with an endpoint
+    outside the vertex table before any flood runs."""
+    import numpy as np
+
+    is_vertex = pdf["__v"].to_numpy(dtype=bool)
+    ids = np.unique(pdf[SRC].to_numpy(dtype=np.int64)[is_vertex])
+    e = pdf[~is_vertex]
+    _, s_ok = sorted_positions(ids, e[SRC].to_numpy(dtype=np.int64))
+    _, d_ok = sorted_positions(ids, e[DST].to_numpy(dtype=np.int64))
+    return _batch_tarjan(e[s_ok & d_ok])
 
 
 class StronglyConnectedComponents:
@@ -223,12 +240,15 @@ class StronglyConnectedComponents:
         )
         spark = verts.sparkSession
         if self.batch_finish and edges.count() <= self.batch_finish:
-            membership = (
-                edges.withColumn("__g", F.lit(0))
-                .groupBy("__g")
-                .applyInPandas(
-                    _batch_tarjan, f"{ID} long, {COMPONENT} long"
+            rows = edges.withColumn("__v", F.lit(False)).unionByName(
+                verts.select(
+                    F.col(ID).alias(SRC),
+                    F.col(ID).alias(DST),
+                    F.lit(True).alias("__v"),
                 )
+            )
+            membership = batch_plan(
+                _batch_tarjan_induced, f"{ID} long, {COMPONENT} long", rows
             )
             singletons = (
                 verts.join(membership.select(ID), ID, "anti")
@@ -260,14 +280,19 @@ class StronglyConnectedComponents:
         return done
 
 
+_REACH_NO_FIXPOINT = (
+    "reachable_set did not converge within max_rounds — raise the budget "
+    "toward the graph diameter"
+)
+
+
 def _batch_reachable(max_rounds: int):
     """Kernel factory for the bounded-batch reachable_set finish: one
     Arrow batch holds the (already direction-oriented) edge list plus
     the seed ids, and the BFS closure replays the distributed loop's
     round structure exactly — up to ``max_rounds`` frontier expansions,
     early return on an empty frontier, and the SAME loud failure when
-    the budget is exhausted before the fixpoint (ValueError text
-    identical; it surfaces through the task failure)."""
+    the budget is exhausted before the fixpoint."""
 
     def bfs(pdf):
         import pandas as pd
@@ -291,10 +316,7 @@ def _batch_reachable(max_rounds: int):
                 return pd.DataFrame({ID: sorted(visited)})
             visited |= nxt
             frontier = nxt
-        raise ValueError(
-            "reachable_set did not converge within max_rounds — raise "
-            "the budget toward the graph diameter"
-        )
+        raise ValueError(_REACH_NO_FIXPOINT)
 
     return bfs
 
@@ -319,14 +341,11 @@ def reachable_set(
     larger wavefront falls back to the shuffle join. The per-round
     count() doubles as convergence probe and plan selector.
 
-    ``batch_finish`` (round 12, guide §2.4): once the edge list fits the
-    bound (one count probe), the whole closure runs as ONE cogrouped
-    Arrow BFS instead of 2-3 fixed-overhead jobs per frontier round —
-    the same bounded-batch-finish contract as the SCC/matching/partition
-    kernels, replaying the identical round budget and loud
-    non-convergence failure. The set of returned ids is identical by
-    construction (reachability is order-free). 0 disables; the
-    distributed loop remains the only path above the bound."""
+    ``batch_finish`` (util.run_batch): once the edge list fits the bound
+    (one count probe), the whole closure runs as one Arrow BFS,
+    replaying the identical round budget and loud non-convergence
+    failure; reachability is order-free, so the returned ids are
+    identical by construction. 0 disables."""
     if direction not in ("forward", "backward"):
         raise ValueError("direction must be 'forward' or 'backward'")
     out_col, in_col = (
@@ -345,24 +364,14 @@ def reachable_set(
             .select("a", F.lit(0).cast("long").alias("b"))
             .withColumn("__m", F.lit(1))
         )
-        batched = (
-            oriented.unionByName(seed_rows)
-            .withColumn("__g", F.lit(0))
-            .groupBy("__g")
-            .applyInPandas(_batch_reachable(max_rounds), f"{ID} long")
+        # eager like the distributed loop: the non-convergence ValueError
+        # surfaces AT THE CALL, not in whatever action touches the frame
+        out, _ = run_batch(
+            _batch_reachable(max_rounds),
+            f"{ID} long",
+            oriented.unionByName(seed_rows),
         )
-        try:
-            # eager like the distributed loop: the non-convergence
-            # failure must surface as a ValueError AT THE CALL, not as a
-            # lazy task failure in whatever action touches the frame next
-            return batched.localCheckpoint()
-        except Exception as e:  # translate the task-wrapped kernel error
-            if "did not converge within max_rounds" in str(e):
-                raise ValueError(
-                    "reachable_set did not converge within max_rounds — "
-                    "raise the budget toward the graph diameter"
-                ) from None
-            raise
+        return out
     # size probes ride the materializing jobs (round 12,
     # checkpoint_observed): the loop paid a count action per round on
     # top of each checkpoint, and re-materialized the visited union
@@ -392,7 +401,4 @@ def reachable_set(
             return visited
         visited = visited.unionByName(new_frontier)
         frontier = new_frontier
-    raise ValueError(
-        "reachable_set did not converge within max_rounds — raise the "
-        "budget toward the graph diameter"
-    )
+    raise ValueError(_REACH_NO_FIXPOINT)

@@ -25,9 +25,10 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pyspark_graph_spark.constants import ID, MSG, STATE
+from pyspark_graph_spark.constants import DST, ID, MSG, SRC, STATE
 from pyspark_graph_spark.graph import Graph
 from pyspark_graph_spark.operators.pregel import Pregel
+from pyspark_graph_spark.util import batch_plan, integral_keys
 
 DISTANCES = "distances"
 LANDMARK = "landmark"
@@ -53,17 +54,15 @@ def _maps_differ(old: Column, new: Column) -> Column:
 def _batch_landmark_bfs(
     landmarks: list[int], max_iterations: int, directed: bool
 ):
-    """Multi-landmark hop-distance BFS in one Arrow batch (round 12,
-    guide §2.4 — the bounded-batch-finish contract of the CC/SCC/
-    reachable kernels). Hop distances are the unique integer BFS
-    fixpoint, so the batch equals the distributed Pregel BY
-    CONSTRUCTION, including the budget truncation: the Pregel delivers
-    distance-d entries in round d, so entries beyond ``max_iterations``
-    levels are absent from both. Messages only relay between state
-    vertices — edges with an endpoint outside the vertex table relay
-    nothing, exactly like the Pregel's state join."""
+    """Multi-landmark hop-distance BFS in one Arrow batch. Hop distances are
+    the unique integer BFS fixpoint, so the batch equals the distributed
+    Pregel BY CONSTRUCTION, including the budget truncation: the Pregel
+    delivers distance-d entries in round d, so entries beyond
+    ``max_iterations`` levels are absent from both. Messages only relay
+    between state vertices — edges with an endpoint outside the vertex
+    table relay nothing, exactly like the Pregel's state join."""
 
-    def kern(_key, v_pdf, e_pdf):
+    def kern(v_pdf, e_pdf):
         import pandas as pd
 
         verts = [int(x) for x in v_pdf[ID]]
@@ -98,8 +97,13 @@ def _batch_landmark_bfs(
                     maps[u][lm] = depth
                 seen |= nxt
                 frontier = nxt
+        # object dtype: an empty plain list would infer float64, which
+        # Arrow cannot convert to a map column
         return pd.DataFrame(
-            {ID: verts, DISTANCES: [maps[v] for v in verts]}
+            {
+                ID: verts,
+                DISTANCES: pd.Series([maps[v] for v in verts], dtype=object),
+            }
         )
 
     return kern
@@ -140,42 +144,21 @@ class ShortestPaths:
 
     def run(self, g: Graph) -> DataFrame:
         if self.batch_finish and not isinstance(self.landmarks, DataFrame):
-            vkinds = {
-                f.name: f.dataType.typeName() for f in g.vertices.schema.fields
-            }
-            ekinds = {
-                f.name: f.dataType.typeName() for f in g.edges.schema.fields
-            }
-            integral = vkinds.get(ID) in (
-                "long",
-                "integer",
-                "short",
-                "byte",
-            ) and all(
-                ekinds.get(c) in ("long", "integer", "short", "byte")
-                for c in ("src", "dst")
-            )
             if (
-                integral
+                integral_keys(g.vertices, ID)
+                and integral_keys(g.edges, SRC, DST)
                 and g.vertices.count() + g.edges.count()
                 <= self.batch_finish
             ):
-                verts = g.vertices.select(ID)
-                edges = g.edges.select("src", "dst")
-                return (
-                    verts.withColumn("__g", F.lit(0))
-                    .groupBy("__g")
-                    .cogroup(
-                        edges.withColumn("__g", F.lit(0)).groupBy("__g")
-                    )
-                    .applyInPandas(
-                        _batch_landmark_bfs(
-                            [int(x) for x in self.landmarks],
-                            self.max_iterations,
-                            g.directed,
-                        ),
-                        f"{ID} long, {DISTANCES} map<bigint,int>",
-                    )
+                return batch_plan(
+                    _batch_landmark_bfs(
+                        [int(x) for x in self.landmarks],
+                        self.max_iterations,
+                        g.directed,
+                    ),
+                    f"{ID} long, {DISTANCES} map<bigint,int>",
+                    g.vertices.select(ID),
+                    g.edges.select(SRC, DST),
                 )
         lm = F.broadcast(self._landmark_df(g))
         seeded = g.vertices.select(ID).join(

@@ -24,24 +24,21 @@ from pyspark.sql import functions as F
 
 from pyspark_graph_spark.constants import DST, ID, SRC
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import (
+    batch_plan,
+    checkpoint_observed,
+    integral_keys,
+    sorted_positions,
+)
 
-# Bounded-batch finish (round 12, guide §2.4): same contract and ulp
-# story as the SVD/ALS/PageRank kernels (operators/svd.py module note).
-# Both spectral iterations are fully guarded (`when(norm > 0)`), so no
-# degenerate deferral is needed — the kernels replay the zero-norm
-# branch exactly.
-
-
-def _integral_graph(g: Graph) -> bool:
-    vk = {f.name: f.dataType.typeName() for f in g.vertices.schema.fields}
-    ek = {f.name: f.dataType.typeName() for f in g.edges.schema.fields}
-    ints = ("long", "integer", "short", "byte")
-    return vk.get(ID) in ints and ek.get(SRC) in ints and ek.get(DST) in ints
+# Bounded-batch finish (util.batch_plan), with the SVD kernels' last-ulp
+# caveat (operators/svd.py module note). Both spectral iterations are
+# fully guarded (`when(norm > 0)`), so no degenerate deferral is needed —
+# the kernels replay the zero-norm branch exactly.
 
 
 def _eigen_batch_kernel(iterations: int):
-    def kern(_key, v_pdf, e_pdf):
+    def kern(v_pdf, e_pdf):
         import numpy as np
         import pandas as pd
 
@@ -50,14 +47,9 @@ def _eigen_batch_kernel(iterations: int):
         dst = e_pdf[DST].to_numpy(dtype=np.int64)
         eorder = np.lexsort((dst, src))
         src, dst = src[eorder], dst[eorder]
-        s_idx = np.searchsorted(ids, src)
-        d_idx = np.searchsorted(ids, dst)
-        ok = (
-            (s_idx < len(ids))
-            & (ids[np.minimum(s_idx, len(ids) - 1)] == src)
-            & (d_idx < len(ids))
-            & (ids[np.minimum(d_idx, len(ids) - 1)] == dst)
-        )
+        s_idx, s_ok = sorted_positions(ids, src)
+        d_idx, d_ok = sorted_positions(ids, dst)
+        ok = s_ok & d_ok
         s_idx, d_idx = s_idx[ok], d_idx[ok]
         x = np.ones(len(ids), dtype=np.float64)
         for _ in range(iterations):
@@ -79,7 +71,7 @@ def _hits_batch_kernel(iterations: int):
     only from vertex-table sources (only they hold hub rows), hub reads
     auth at any destination, and the output projects the vertex slots."""
 
-    def kern(_key, v_pdf, e_pdf):
+    def kern(v_pdf, e_pdf):
         import numpy as np
         import pandas as pd
 
@@ -117,20 +109,6 @@ def _hits_batch_kernel(iterations: int):
     return kern
 
 
-def _cogroup_graph(
-    verts: DataFrame, edges: DataFrame, kernel, schema: str
-) -> DataFrame:
-    return (
-        verts.select(ID)
-        .withColumn("__g", F.lit(0))
-        .groupBy("__g")
-        .cogroup(
-            edges.select(SRC, DST).withColumn("__g", F.lit(0)).groupBy("__g")
-        )
-        .applyInPandas(kernel, schema)
-    )
-
-
 def _l2_normalize(scores: DataFrame, col: str) -> DataFrame:
     """Divide ``col`` by its global L2 norm (broadcast 1-row join)."""
     norm = scores.agg(
@@ -166,16 +144,17 @@ class EigenvectorCentrality:
         )
         if (
             self.batch_finish
-            and _integral_graph(g)
+            and integral_keys(g.vertices, ID)
+            and integral_keys(g.edges, SRC, DST)
             and 0
             < (me["__n"] or 0) + (mv["__n"] or 0)
             <= self.batch_finish
         ):
-            return _cogroup_graph(
-                verts,
-                edges,
+            return batch_plan(
                 _eigen_batch_kernel(self.iterations),
                 f"{ID} long, eigenvector double",
+                verts,
+                edges,
             )
         x = verts.select(ID, F.lit(1.0).alias("eigenvector"))
         for _ in range(self.iterations):
@@ -229,18 +208,22 @@ class HITS:
 
     def run(self, g: Graph) -> DataFrame:
         """Returns ``(id, hub, authority)`` for every vertex."""
-        if self.batch_finish and _integral_graph(g):
+        if (
+            self.batch_finish
+            and integral_keys(g.vertices, ID)
+            and integral_keys(g.edges, SRC, DST)
+        ):
             # plain count probes — above the bound the distributed body
             # builds its own persisted by_dst/by_src frames, so a gate
             # checkpoint would be a wasted full write at data scale
             ev = g.edges.select(SRC, DST)
             vv = g.vertices.select(ID)
             if 0 < ev.count() + vv.count() <= self.batch_finish:
-                return _cogroup_graph(
-                    vv,
-                    ev,
+                return batch_plan(
                     _hits_batch_kernel(self.iterations),
                     f"{ID} long, hub double, authority double",
+                    vv,
+                    ev,
                 )
         # persist (NOT localCheckpoint) the static sides: a checkpointed
         # frame scans as a bare RDD with its outputPartitioning erased, so

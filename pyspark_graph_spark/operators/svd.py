@@ -33,28 +33,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# ---------------------------------------------------------------------------
-# Bounded-batch finish (round 12, guide §2.4): once the COO table fits
-# batch_finish rows (one count probe on the already-checkpointed frame),
-# the whole power-iteration trajectory runs inside ONE cogrouped Arrow
-# kernel instead of 2-5 fixed-overhead jobs per half-iteration — the
-# same bounded-batch-finish contract as the CC/SCC/matching/partition
-# kernels, with the distributed per-iteration plan unchanged above the
-# bound (it is the only 100 TB path; the bound only short-circuits
-# dimension-scale inputs). The kernel replays the identical IEEE-754
-# double algebra expression by expression (same matvec -> correction ->
-# normalize order, same null guards, same loud rank-exhaustion
-# ValueErrors). The one thing it cannot replay is the ORDER Spark's
-# parallel partial aggregates happen to merge per-key sums in — which
-# Spark itself does not pin run to run (shuffle fetch order) — so
-# per-sum results can differ from a distributed run in the last ulp,
-# exactly the noise class the engine's own reruns carry; the queries'
-# 6-decimal output rounding sits ~6 orders of magnitude above it.
-# Equality of both paths' gate outputs is pinned by
-# tests/test_svd_batch.py and the committed oracle sweeps.
-# ---------------------------------------------------------------------------
+from pyspark_graph_spark.util import BatchDefer, integral_keys, run_batch
 
-_BATCH_SCHEMA = "side tinyint, key long, factor long, x double, sigma double"
+# Bounded-batch finish (util.run_batch): the kernels replay the identical
+# IEEE-754 double algebra expression by expression (same matvec ->
+# correction -> normalize order, same null guards, same loud
+# rank-exhaustion ValueErrors). The one thing they cannot replay is the
+# ORDER Spark's parallel partial aggregates happen to merge per-key sums
+# in — which Spark itself does not pin run to run (shuffle fetch order)
+# — so per-sum results can differ from a distributed run in the last
+# ulp, exactly the noise class the engine's own reruns carry; the
+# queries' 6-decimal output rounding sits ~6 orders of magnitude above
+# it. A trajectory whose norm or Cholesky pivot hits exactly 0.0/NaN
+# enters the plan's NULL-guard regime (null rows under null-skipping
+# aggregates); the kernels defer those to the distributed plan, which IS
+# those semantics. Equality of both paths' gate outputs is pinned by
+# tests/test_svd_batch.py and the committed oracle sweeps.
+
+_SVD_SCHEMA = "side tinyint, key long, factor long, x double, sigma double"
 
 
 def _coo_arrays(pdf):
@@ -95,54 +91,29 @@ def _emit(parts):
     )
 
 
-def _batch_out(a: DataFrame, kernel) -> DataFrame | None:
-    """Run one SVD batch kernel over the checkpointed COO frame and
-    return the checkpointed tagged output. The localCheckpoint is eager,
-    so kernel ValueErrors surface AT THE CALL exactly like the
-    distributed path's driver-side sigma probes. Returns ``None`` when
-    the kernel reports an exactly-degenerate trajectory (a norm or
-    Cholesky pivot hit 0.0/NaN, where the plan's `when` guards start
-    producing NULL rows with null-skipping aggregate semantics): the
-    caller then runs the distributed plan, which IS those semantics —
-    the wasted kernel probe only costs on pathological inputs. Real
-    rank exhaustion (tiny-but-nonzero sigma, the r10 ADVICE #2 class)
-    raises inside the kernel with the distributed path's exact text."""
-    out = (
-        a.withColumn("__g", F.lit(0))
-        .groupBy("__g")
-        .applyInPandas(kernel, _BATCH_SCHEMA)
+def _split_factors(out: DataFrame, row_col: str, col_col: str):
+    """Rank-k batch output -> the distributed path's ``(u, v)`` frames."""
+    factor = F.col("factor").cast("int").alias("factor")
+    u_out = out.filter(F.col("side") == 0).select(
+        F.col("key").alias(row_col), factor, F.col("x").alias("u")
     )
-    try:
-        return out.localCheckpoint()
-    except Exception as e:
-        msg = str(e)
-        if "__SVD_BATCH_DEGENERATE__" in msg:
-            return None
-        marker = "__SVD_BATCH_VALUEERROR__"
-        if marker in msg:
-            detail = msg.split(marker, 1)[1].split("\n", 1)[0].strip()
-            raise ValueError(detail) from None
-        raise
+    v_out = out.filter(F.col("side") == 1).select(
+        F.col("key").alias(col_col),
+        factor,
+        F.col("x").alias("v"),
+        F.col("sigma").alias("sigma"),
+    )
+    return u_out, v_out
 
 
 def _check_finite_norm(n: float) -> float:
     """Zero or non-finite norms put the distributed plan into its
-    NULL-guard regime — defer those trajectories to it (see
-    _batch_out). Raises through the Arrow task as the degenerate
-    marker."""
+    NULL-guard regime — defer those trajectories to it."""
     import math
 
     if n == 0.0 or not math.isfinite(n):
-        raise RuntimeError("__SVD_BATCH_DEGENERATE__")
+        raise BatchDefer("zero or non-finite norm")
     return n
-
-
-def _integral_keys(a: DataFrame) -> bool:
-    kinds = {f.name: f.dataType.typeName() for f in a.schema.fields}
-    return all(
-        kinds[k] in ("long", "integer", "short", "byte")
-        for k in ("__r", "__c")
-    )
 
 
 def _power_batch_kernel(iterations: int):
@@ -192,7 +163,7 @@ def _deflated_batch_kernel(k: int, iterations: int, rank_tolerance: float):
 
         rows, cols, r_idx, c_idx, av = _coo_arrays(pdf)
         if len(rows) == 0:
-            raise RuntimeError("__SVD_BATCH_DEGENERATE__")
+            raise BatchDefer("empty matrix")
         factors = []  # (u_vec, v_vec, sigma_float)
         for j in range(k):
             x = np.ones(len(cols), dtype=np.float64)
@@ -214,12 +185,11 @@ def _deflated_batch_kernel(k: int, iterations: int, rank_tolerance: float):
                 sigma = vn
             s_val = sigma
             if not math.isfinite(s_val):
-                raise RuntimeError("__SVD_BATCH_DEGENERATE__")
+                raise BatchDefer("non-finite sigma")
             if factors and s_val < rank_tolerance * factors[0][2]:
                 raise ValueError(
-                    f"__SVD_BATCH_VALUEERROR__rank-{k} SVD failed at "
-                    f"factor {j}: sigma_{j} = {s_val:.3e} < "
-                    f"rank_tolerance * sigma_0 = "
+                    f"rank-{k} SVD failed at factor {j}: sigma_{j} = "
+                    f"{s_val:.3e} < rank_tolerance * sigma_0 = "
                     f"{rank_tolerance * factors[0][2]:.3e} — k exceeds "
                     "the effective rank of the matrix"
                 )
@@ -256,7 +226,7 @@ def _block_batch_kernel(k: int, iterations: int, rank_tolerance: float):
 
         rows, cols, r_idx, c_idx, av = _coo_arrays(pdf)
         if len(rows) == 0:
-            raise RuntimeError("__SVD_BATCH_DEGENERATE__")
+            raise BatchDefer("empty matrix")
 
         def chol_qr(mat):
             """mat: (n, k) input columns; returns (q (n,k), diag sigma
@@ -274,7 +244,7 @@ def _block_batch_kernel(k: int, iterations: int, rank_tolerance: float):
                         e = e - r[(i, p)] * r[(i, j2)]
                     if p == j2:
                         if not e > 0:
-                            raise RuntimeError("__SVD_BATCH_DEGENERATE__")
+                            raise BatchDefer("non-positive pivot")
                         r[(p, j2)] = math.sqrt(e)
                     else:
                         r[(p, j2)] = e / _check_finite_norm(r[(p, p)])
@@ -304,13 +274,12 @@ def _block_batch_kernel(k: int, iterations: int, rank_tolerance: float):
         for j in range(k):
             s_val = sigs[j]
             if not math.isfinite(s_val):
-                raise RuntimeError("__SVD_BATCH_DEGENERATE__")
+                raise BatchDefer("non-finite sigma")
             if j > 0 and s_val < rank_tolerance * sigs[0]:
                 raise ValueError(
-                    f"__SVD_BATCH_VALUEERROR__rank-{k} block SVD failed "
-                    f"at factor {j}: sigma_{j} = {s_val:.3e} < "
-                    "rank_tolerance * sigma_0 — k exceeds the effective "
-                    "rank of the matrix"
+                    f"rank-{k} block SVD failed at factor {j}: sigma_{j} = "
+                    f"{s_val:.3e} < rank_tolerance * sigma_0 — k exceeds "
+                    "the effective rank of the matrix"
                 )
         parts = []
         for j in range(k):
@@ -344,10 +313,9 @@ def power_iteration_svd(
     zeros). Signs follow the all-ones start vector (v_0 = 1), so the
     output is deterministic — no random init to pin down.
 
-    ``batch_finish`` (round 12, guide §2.4): once the COO table fits the
-    bound, the whole trajectory runs in one Arrow batch (see the module
-    note above). 0 disables; the two-shuffle-per-half-iteration plan is
-    the only path above the bound.
+    ``batch_finish``: once the COO table fits the bound, the whole
+    trajectory runs in one Arrow batch (see the module note above). 0
+    disables.
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
@@ -358,10 +326,10 @@ def power_iteration_svd(
     ).localCheckpoint()
     if (
         batch_finish
-        and _integral_keys(a)
+        and integral_keys(a, "__r", "__c")
         and 0 < a.count() <= batch_finish
     ):
-        out = _batch_out(a, _power_batch_kernel(iterations))
+        out, _ = run_batch(_power_batch_kernel(iterations), _SVD_SCHEMA, a)
         if out is not None:
             u_out = out.filter(F.col("side") == 0).select(
                 F.col("key").alias(row_col), F.col("x").alias("u")
@@ -474,25 +442,16 @@ def deflated_power_iteration_svd(
     ).localCheckpoint()
     if (
         batch_finish
-        and _integral_keys(a)
+        and integral_keys(a, "__r", "__c")
         and 0 < a.count() <= batch_finish
     ):
-        out = _batch_out(
-            a, _deflated_batch_kernel(k, iterations, rank_tolerance)
+        out, _ = run_batch(
+            _deflated_batch_kernel(k, iterations, rank_tolerance),
+            _SVD_SCHEMA,
+            a,
         )
         if out is not None:
-            u_out = out.filter(F.col("side") == 0).select(
-                F.col("key").alias(row_col),
-                F.col("factor").cast("int").alias("factor"),
-                F.col("x").alias("u"),
-            )
-            v_out = out.filter(F.col("side") == 1).select(
-                F.col("key").alias(col_col),
-                F.col("factor").cast("int").alias("factor"),
-                F.col("x").alias("v"),
-                F.col("sigma").alias("sigma"),
-            )
-            return u_out, v_out
+            return _split_factors(out, row_col, col_col)
     all_cols = a.select("__c").distinct().localCheckpoint()
     # (u_df(__r,__x), v_df(__c,__x), sigma_scalar_df(__s)) per factor
     factors: list[tuple[DataFrame, DataFrame, DataFrame, float]] = []
@@ -717,25 +676,16 @@ def block_power_iteration_svd(
     # so both modes batch through the same kernel
     if (
         batch_finish
-        and _integral_keys(a)
+        and integral_keys(a, "__r", "__c")
         and 0 < a.count() <= batch_finish
     ):
-        out = _batch_out(
-            a, _block_batch_kernel(k, iterations, rank_tolerance)
+        out, _ = run_batch(
+            _block_batch_kernel(k, iterations, rank_tolerance),
+            _SVD_SCHEMA,
+            a,
         )
         if out is not None:
-            u_out = out.filter(F.col("side") == 0).select(
-                F.col("key").alias(row_col),
-                F.col("factor").cast("int").alias("factor"),
-                F.col("x").alias("u"),
-            )
-            v_out = out.filter(F.col("side") == 1).select(
-                F.col("key").alias(col_col),
-                F.col("factor").cast("int").alias("factor"),
-                F.col("x").alias("v"),
-                F.col("sigma").alias("sigma"),
-            )
-            return u_out, v_out
+            return _split_factors(out, row_col, col_col)
 
     def _chol_qr_driver(
         frame: DataFrame, key: str, in_prefix: str, out_prefix: str

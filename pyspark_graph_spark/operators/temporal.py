@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import batch_plan, checkpoint_observed
 
 
 def as_of_join(
@@ -389,23 +389,13 @@ def earliest_arrival(
     # huge seed set with a small edge list must take the distributed
     # rounds, not land on one executor (r9 ADVICE #2)
     if batch_finish and (me["__n"] or 0) + n_front <= batch_finish:
-        # bounded batch: the earliest-arrival table is a unique least
-        # fixpoint, so one Arrow temporal-Dijkstra equals the distributed
-        # rounds by definition (same adjudicated bounded-batch-finish
-        # contract as CC/SCC/MST); the label-correcting rounds below
-        # remain the only path above the bound. 2M rows x 24 B ≈ 48 MB
-        # on one executor; measured 3.1 s vs 10.8 s distributed on the
-        # 1.2M-edge sf0.1 contact graph (SCALE.md round 9)
-        return (
-            state.withColumn("__g", F.lit(0))
-            .groupBy("__g")
-            .cogroup(e.withColumn("__g", F.lit(0)).groupBy("__g"))
-            .applyInPandas(
-                lambda key, s_pdf, e_pdf: _batch_temporal_dijkstra(
-                    s_pdf, e_pdf
-                ),
-                "id long, arrival long",
-            )
+        # the earliest-arrival table is a unique least fixpoint, so one
+        # Arrow temporal-Dijkstra equals the distributed rounds by
+        # definition. 2M rows x 24 B ≈ 48 MB on one executor; measured
+        # 3.1 s vs 10.8 s distributed on the 1.2M-edge sf0.1 contact
+        # graph (SCALE.md round 9)
+        return batch_plan(
+            _batch_temporal_dijkstra, "id long, arrival long", state, e
         )
     rounds = 0
     budget = max_rounds

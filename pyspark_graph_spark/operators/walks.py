@@ -22,21 +22,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyspark_graph_spark.constants import ADJ, ID
+from pyspark_graph_spark.constants import ADJ, DST, ID, SRC
 from pyspark_graph_spark.functions.hashing import md5_hash60_concat
 from pyspark_graph_spark.graph import Graph
-from pyspark_graph_spark.util import checkpoint_observed
+from pyspark_graph_spark.util import (
+    batch_plan,
+    checkpoint_observed,
+    integral_keys,
+)
 
 
 def _batch_walks_md5(length: int, walks_per_vertex: int, seed: int):
-    """The md5-mode walk loop in one Arrow batch (round 12, guide §2.4):
-    every step is a pure function of (graph, seed) via
-    md5_hash60_concat — hashlib.md5 over the identical comma-joined
-    string replays it bit for bit, the adjacency arrays are the same
-    sorted distinct neighbor sets, and pmod of the 60-bit nonnegative
-    hash equals Python %. Batch == distributed by construction."""
+    """The md5-mode walk loop in one Arrow batch: every step is a pure function
+    of (graph, seed) via md5_hash60_concat — hashlib.md5 over the
+    identical comma-joined string replays it bit for bit, the adjacency
+    arrays are the same sorted distinct neighbor sets, and pmod of the
+    60-bit nonnegative hash equals Python %. Batch == distributed by
+    construction."""
 
-    def kern(_key, v_pdf, e_pdf):
+    def kern(v_pdf, e_pdf):
         import hashlib
 
         import pandas as pd
@@ -63,8 +67,14 @@ def _batch_walks_md5(length: int, walks_per_vertex: int, seed: int):
                 wids.append(wid)
                 starts.append(v)
                 paths.append(path)
+        # object dtype: an empty plain list would infer float64, which
+        # Arrow cannot convert to an array column
         return pd.DataFrame(
-            {"walk_id": wids, "start": starts, "path": paths}
+            {
+                "walk_id": wids,
+                "start": starts,
+                "path": pd.Series(paths, dtype=object),
+            }
         )
 
     return kern
@@ -104,18 +114,8 @@ class RandomWalks:
     def run(self, g: Graph) -> DataFrame:
         """(walk_id, start, path array<long>) — one row per walk."""
         if self.batch_finish and self.hash_mode == "md5":
-            vk = {
-                f.name: f.dataType.typeName()
-                for f in g.vertices.schema.fields
-            }
-            ek = {
-                f.name: f.dataType.typeName() for f in g.edges.schema.fields
-            }
-            ints = ("long", "integer", "short", "byte")
-            if (
-                vk.get(ID) in ints
-                and ek.get("src") in ints
-                and ek.get("dst") in ints
+            if integral_keys(g.vertices, ID) and integral_keys(
+                g.edges, SRC, DST
             ):
                 # plain count probes (no materializing checkpoint — the
                 # distributed loop builds its own adjacency, so a gate
@@ -129,20 +129,13 @@ class RandomWalks:
                 pairs = g.symmetric_edges.select("src", "dst")
                 verts = g.vertices.select(ID)
                 if 0 < pairs.count() + verts.count() <= self.batch_finish:
-                    return (
-                        verts.withColumn("__g", F.lit(0))
-                        .groupBy("__g")
-                        .cogroup(
-                            pairs.withColumn("__g", F.lit(0)).groupBy("__g")
-                        )
-                        .applyInPandas(
-                            _batch_walks_md5(
-                                self.length,
-                                self.walks_per_vertex,
-                                self.seed,
-                            ),
-                            "walk_id long, start long, path array<long>",
-                        )
+                    return batch_plan(
+                        _batch_walks_md5(
+                            self.length, self.walks_per_vertex, self.seed
+                        ),
+                        "walk_id long, start long, path array<long>",
+                        verts,
+                        pairs,
                     )
         adj = g.adjacency.filter(F.size(ADJ) > 0).localCheckpoint()
 

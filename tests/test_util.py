@@ -88,3 +88,52 @@ def test_transitive_closure_cycle_converges(spark):
     got = {(r["src"], r["dst"]) for r in TransitiveClosure().apply(g).collect()}
     # every ordered pair of distinct vertices is reachable on a 3-cycle
     assert got == {(a, b) for a in range(3) for b in range(3) if a != b}
+
+
+def test_run_batch_typed_outcomes(spark):
+    """util.run_batch: rows plus observed metrics, a typed deferral, and a
+    kernel ValueError re-raised with its exact text."""
+    import numpy as np
+
+    from pyspark_graph_spark.util import BatchDefer, run_batch
+
+    df = spark.createDataFrame([(1,), (2,)], "id long")
+
+    def double(pdf):
+        return pdf.assign(x=pdf["id"] * 2)[["id", "x"]]
+
+    out, m = run_batch(double, "id long, x long", df, s=F.sum("x"))
+    assert sorted(tuple(r) for r in out.collect()) == [(1, 2), (2, 4)]
+    assert out.columns == ["id", "x"] and m["s"] == 6
+
+    def defer(pdf):
+        raise BatchDefer("cannot replay")
+
+    assert run_batch(defer, "id long, x long", df)[0] is None
+
+    def loud(left, right):
+        raise ValueError(f"exact text {len(left) + len(right)}")
+
+    with pytest.raises(ValueError) as err:
+        run_batch(loud, "id long", df, df)
+    assert str(err.value) == "exact text 4"
+
+    def crash(pdf):
+        return np.empty(0)[1]
+
+    with pytest.raises(Exception) as err:
+        run_batch(crash, "id long", df)
+    assert not isinstance(err.value, ValueError)
+
+
+def test_sorted_positions_empty_and_missing():
+    import numpy as np
+
+    from pyspark_graph_spark.util import sorted_positions
+
+    ids = np.array([2, 5, 9], dtype=np.int64)
+    pos, found = sorted_positions(ids, np.array([5, 3, 10, 2]))
+    assert found.tolist() == [True, False, False, True]
+    assert pos[found].tolist() == [1, 0]
+    pos, found = sorted_positions(np.array([], dtype=np.int64), np.array([1]))
+    assert found.tolist() == [False]
